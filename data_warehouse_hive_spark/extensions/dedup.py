@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_warehouse_hive_spark.registry import query
-from data_warehouse_hive_spark.tables import spread, t
+from data_warehouse_hive_spark.tables import ordered_pairs, spread, t
 
 # MinHash configuration: K hashes in B bands of R rows (K = B*R).
 MINHASH_K = 12
@@ -154,6 +154,22 @@ def signature(docs: DataFrame, n: int = 3, k: int = MINHASH_K) -> DataFrame:
     return hashed.groupBy("doc_id").agg(*aggs)
 
 
+def band_rows(sig: DataFrame) -> DataFrame:
+    """signature → (doc_id, band_id, band_key): one row per doc per LSH
+    band, the band key being that band's LSH_ROWS minhash values joined
+    by '_' (the oracle's concat_ws in _o_minhash_bands_cte)."""
+    band_cols = [
+        F.concat_ws(
+            "_", *[F.col(f"mh_{b * LSH_ROWS + r}") for r in range(LSH_ROWS)]
+        )
+        for b in range(LSH_BANDS)
+    ]
+    return sig.select(
+        "doc_id",
+        F.posexplode(F.array(*band_cols)).alias("band_id", "band_key"),
+    )
+
+
 # ---------------------------------------------------------------------------
 # Oracle-side SQL builders (DuckDB) — same algebra, same md5 hashing.
 # ---------------------------------------------------------------------------
@@ -266,43 +282,18 @@ def minhash_candidate_pairs(docs: DataFrame, sig: DataFrame | None = None) -> Da
     """
     if sig is None:
         sig = signature(docs)
-    band_cols = [
-        F.concat_ws(
-            "_", *[F.col(f"mh_{b * LSH_ROWS + r}") for r in range(LSH_ROWS)]
-        ).alias(f"band_{b}")
-        for b in range(LSH_BANDS)
-    ]
-    banded = sig.select(
-        "doc_id",
-        F.posexplode(F.array(*band_cols)).alias("band_id", "band_key"),
-    )
-    # Bucketize instead of self-joining: a self-join would recompute the
-    # whole shingle→signature lineage once per side AND shuffle it twice;
-    # grouping pays one shuffle on the uniform (band_id, band_key) and
-    # expands pairs inside each bucket.  A pathological hot bucket is
-    # quadratic either way — LSH band keys keep buckets tiny by design.
+    # One shuffle on the uniform (band_id, band_key) gathers each bucket's
+    # sorted doc ids (a doc has one key per band, so ids are distinct);
+    # ordered_pairs then streams the bucket's m(m−1)/2 doc_a < doc_b
+    # rows — no one row holds them.  LSH band keys keep m tiny by design;
+    # q_dedup_bucket_stats monitors the hot bucket.
     buckets = (
-        banded.groupBy("band_id", "band_key")
-        .agg(F.collect_list("doc_id").alias("ids"))
+        band_rows(sig)
+        .groupBy("band_id", "band_key")
+        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
         .filter(F.size("ids") > 1)
     )
-    ids = F.col("ids")
-    pairs = F.filter(
-        F.flatten(
-            F.transform(
-                ids,
-                lambda x: F.transform(
-                    ids, lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b"))
-                ),
-            )
-        ),
-        lambda p: p.getField("doc_a") < p.getField("doc_b"),
-    )
-    return (
-        buckets.select(F.explode(pairs).alias("p"))
-        .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
-        .distinct()
-    )
+    return ordered_pairs(buckets, "ids", "doc_a", "doc_b").distinct()
 
 
 # Session-scoped memo for the LSH candidate-pair relation, keyed
@@ -340,11 +331,12 @@ def candidate_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup candidate pairs: shingle → md5-seeded universal
-    hashes (K=12) → 4 bands × 3 rows → band-bucket equi-join → distinct
-    candidate pairs.
+    hashes (K=12) → 4 bands × 3 rows → band buckets → in-bucket i<j
+    pairs → distinct candidate pairs.
 
-    The join is on (band_id, band_key) — uniformly distributed keys, so
-    the shuffle is balanced; no O(n²) comparison ever happens.  md5 runs
+    The one shuffle is on (band_id, band_key) — uniformly distributed
+    keys, so it is balanced; a bucket of m docs streams m(m−1)/2 pair
+    rows and no O(n²) comparison over the corpus ever happens.  md5 runs
     once per shingle; the K permutations are integer (A·h+B) mod P ops.
     The DuckDB oracle reimplements the identical algebra, making the LSH
     pipeline fully value-checked.
@@ -394,40 +386,16 @@ def minhash_candidate_pairs_capped(
     aggregates), so the shingle→signature lineage runs exactly once.
     """
     sig = signature(docs)
-    band_cols = [
-        F.concat_ws(
-            "_", *[F.col(f"mh_{b * LSH_ROWS + r}") for r in range(LSH_ROWS)]
-        ).alias(f"band_{b}")
-        for b in range(LSH_BANDS)
-    ]
-    banded = sig.select(
-        "doc_id",
-        F.posexplode(F.array(*band_cols)).alias("band_id", "band_key"),
-    )
     buckets = (
-        banded.groupBy("band_id", "band_key")
-        .agg(F.collect_list("doc_id").alias("ids"))
+        band_rows(sig)
+        .groupBy("band_id", "band_key")
+        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
         .filter(F.size("ids") > 1)
         .localCheckpoint(eager=False)
     )
-    ids = F.col("ids")
-    pair_arr = F.filter(
-        F.flatten(
-            F.transform(
-                ids,
-                lambda x: F.transform(
-                    ids, lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b"))
-                ),
-            )
-        ),
-        lambda p: p.getField("doc_a") < p.getField("doc_b"),
-    )
-    pairs = (
-        buckets.filter(F.size("ids") <= cap)
-        .select(F.explode(pair_arr).alias("p"))
-        .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
-        .distinct()
-    )
+    pairs = ordered_pairs(
+        buckets.filter(F.size("ids") <= cap), "ids", "doc_a", "doc_b"
+    ).distinct()
     hot = buckets.filter(F.size("ids") > cap)
     mass = hot.agg(
         F.count(F.lit(1)).cast("long").alias("skipped_buckets"),
@@ -2054,17 +2022,7 @@ def q_dedup_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     every metric is an exact integer (pair workload uses integer
     s(s−1)/2)."""
     sig = signature(t(spark, sf_dir, "documents"))
-    band_cols = [
-        F.concat_ws(
-            "_", *[F.col(f"mh_{b * LSH_ROWS + r}") for r in range(LSH_ROWS)]
-        ).alias(f"band_{b}")
-        for b in range(LSH_BANDS)
-    ]
-    banded = sig.select(
-        "doc_id",
-        F.posexplode(F.array(*band_cols)).alias("band_id", "band_key"),
-    )
-    sizes = banded.groupBy("band_id", "band_key").agg(
+    sizes = band_rows(sig).groupBy("band_id", "band_key").agg(
         F.count(F.lit(1)).cast("long").alias("sz")
     )
     pw = F.expr("sz * (sz - 1) div 2")

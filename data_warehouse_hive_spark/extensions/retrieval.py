@@ -25,7 +25,7 @@ from data_warehouse_hive_spark.extensions.similarity import (
     eval_lsh_topk,
     lsh_topk,
 )
-from data_warehouse_hive_spark.tables import spread, t
+from data_warehouse_hive_spark.tables import ordered_pairs, spread, t
 
 RRF_K = 60  # the standard reciprocal-rank-fusion constant
 FUSE_TOP = 20
@@ -653,23 +653,21 @@ def q_recs_similar_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     co/√(cnt_a·cnt_b), top-5 neighbors per item — the memory-based CF
     recommender that runs entirely as joins + windows.
 
-    Scale shape (r15, guide §2.4 remove shuffles outright): ONE exchange
-    on the order key builds each basket's distinct sorted item array
-    (collect_set partial-aggregates map-side — the old DISTINCT +
-    count-window + basket-to-basket self-join spent three exchanges and
-    an SMJ sort to reach the same pairs), the MAX_BASKET cap is a
-    size() filter on the array (a 10k-line order contributes 5·10⁷
-    pairs and zero signal), and the i<j pair expansion is a NARROW
-    array generator per basket — pairs never cross the network until
-    they collapse into (pa, pb) counts.  item_cnt re-derives from the
-    same checkpointed basket arrays, so the capped corpus is scanned
-    once.  Cosine divides two exact integers — deterministic to the
-    1e-6 pin."""
+    Scale shape: ONE exchange on the order key builds each basket's
+    distinct sorted item array (collect_set partial-aggregates
+    map-side), the MAX_BASKET cap is a size() filter on the array (a
+    10k-line order contributes 5·10⁷ pairs and zero signal), and
+    ordered_pairs streams a basket's m(m−1)/2 pa < pb rows through a
+    NARROW generator — no one row holds them, and pairs never cross
+    the network until they collapse into (pa, pb) counts.  item_cnt
+    re-derives from the same checkpointed basket arrays, so the capped
+    corpus is scanned once.  Cosine divides two exact integers —
+    deterministic to the 1e-6 pin."""
     l = t(spark, sf_dir, "lineitem")
     items = (
         l.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
-        # collect_set = the old DISTINCT, fused into the one exchange;
-        # sort_array pins the combination order so pa < pb by slicing
+        # collect_set dedups each basket inside the one exchange;
+        # sort_array gives ordered_pairs the ascending input it needs
         .groupBy("ok")
         .agg(F.sort_array(F.collect_set("pk")).alias("ps"))
         .filter(F.size("ps") <= MAX_BASKET)
@@ -681,21 +679,9 @@ def q_recs_similar_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("pk")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    # all i<j combinations of the sorted array: x at 0-based index i
-    # pairs with every later element (slice is 1-based; length size(ps)
-    # clamps to the tail) — exactly the old self-join's pa < pb pairs
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("ps"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ps"), i + F.lit(2), F.size("ps")),
-                lambda y: F.struct(x.alias("pa"), y.alias("pb")),
-            ),
-        )
-    )
     cooc = (
-        items.select(F.explode(pair_structs).alias("p"))
-        .groupBy(F.col("p.pa").alias("pa"), F.col("p.pb").alias("pb"))
+        ordered_pairs(items, "ps", "pa", "pb")
+        .groupBy("pa", "pb")
         .agg(F.count(F.lit(1)).alias("co"))
     )
     scored = (
@@ -778,13 +764,15 @@ def q_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     All three metrics divide exact integers (pair count, item counts,
     basket total) — deterministic to the 1e-6 pin; the ≥2-support
     HAVING prunes the pair tail before the metric joins, and the 1-row
-    basket total broadcasts."""
+    basket total broadcasts.
+
+    Bound: the oracle mines every basket, so there is no size cap here.
+    A basket of m items costs m(m−1)/2 pair rows, streamed by
+    ordered_pairs — no one row holds them, so a mega-basket costs time
+    in its task, not a quadratic single-row allocation."""
     l = t(spark, sf_dir, "lineitem")
-    # r15 (guide §2.4): one exchange on the order key builds each
-    # basket's sorted distinct item array (collect_set = the old
-    # DISTINCT, fused); the i<j pair expansion is a narrow per-basket
-    # array generator — the old basket-to-basket self-join shuffled the
-    # (ok, pk) relation twice more and SMJ-sorted it for the same pairs.
+    # one exchange on the order key builds each basket's sorted distinct
+    # item array; ordered_pairs expands it narrowly, per basket
     items = (
         l.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
         .groupBy("ok")
@@ -798,18 +786,9 @@ def q_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("pk")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("ps"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ps"), i + F.lit(2), F.size("ps")),
-                lambda y: F.struct(x.alias("pa"), y.alias("pb")),
-            ),
-        )
-    )
     cooc = (
-        items.select(F.explode(pair_structs).alias("p"))
-        .groupBy(F.col("p.pa").alias("pa"), F.col("p.pb").alias("pb"))
+        ordered_pairs(items, "ps", "pa", "pb")
+        .groupBy("pa", "pb")
         .agg(F.count(F.lit(1)).alias("co"))
         .filter(F.col("co") >= 2)
     )

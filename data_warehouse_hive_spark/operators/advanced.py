@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from data_warehouse_hive_spark.registry import DEC, dsum, o_dsum, query, to_carrier
-from data_warehouse_hive_spark.tables import t
+from data_warehouse_hive_spark.tables import ordered_pairs, t
 
 
 @query(
@@ -768,20 +768,14 @@ def q_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket pair mining: co-purchased part pairs with support
     counts (the candidate-generation step of association-rule mining).
 
-    The pair expansion (r15, guide §2.4 remove shuffles outright) is a
-    NARROW i<j generator over each basket's sorted distinct item array:
-    ONE exchange on the order key (collect_set fuses the old DISTINCT
-    and partial-aggregates map-side; the old shape spent three
-    exchanges — distinct, count-window, self-join — plus an SMJ sort to
-    reach the same pairs), the _MAX_BASKET cap is a size() filter on
-    the array (a degenerate mega-basket can never quadratically amplify
-    the expansion), pairs collapse into support counts via one hash
-    agg, then TakeOrderedAndProject for the top-k with full-key
-    determinism.  Safe at any corpus size because baskets are small
-    (≤13 lines in the fixture; bounded in any real order system) — the
-    same bounded-in-group-expansion argument as the LSH bucket joins,
-    with part_a < part_b (by slicing the sorted array) halving the
-    pairs and making each unordered pair unique.
+    The pair expansion is ordered_pairs, a NARROW i<j generator over
+    each basket's sorted distinct item array: ONE exchange on the order
+    key (collect_set dedups and partial-aggregates map-side), the
+    _MAX_BASKET cap is a size() filter on the array, pairs collapse
+    into support counts via one hash agg, then TakeOrderedAndProject
+    for the top-k with full-key determinism.  Bound: a basket of
+    m ≤ _MAX_BASKET items streams m(m−1)/2 part_a < part_b rows — no
+    one row holds them, and each unordered pair appears once.
     """
     items = (
         t(spark, sf_dir, "lineitem")
@@ -791,20 +785,9 @@ def q_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.size("ps") <= _MAX_BASKET)
         .select("ps")
     )
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("ps"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ps"), i + F.lit(2), F.size("ps")),
-                lambda y: F.struct(x.alias("pa"), y.alias("pb")),
-            ),
-        )
-    )
     pairs = (
-        items.select(F.explode(pair_structs).alias("p"))
-        .groupBy(
-            F.col("p.pa").alias("part_a"), F.col("p.pb").alias("part_b")
-        )
+        ordered_pairs(items, "ps", "part_a", "part_b")
+        .groupBy("part_a", "part_b")
         .agg(F.count(F.lit(1)).alias("support"))
     )
     from pyspark.sql import Window

@@ -1767,7 +1767,8 @@ def q_stats_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
         # truncating `div` would interleave bucket 0 across signs, so the
         # non-negative precondition is ENFORCED, not just documented (r14
         # ADVICE): a signed-domain caller fails loudly instead of getting
-        # silently corrupted midranks.  The branch is codegen'd per
+        # silently corrupted midranks.  A NULL (for which `>= 0` is not
+        # true either) gets its own message.  The branch is codegen'd per
         # distinct value (not per row) — no measurable cost.
         vc = (
             df.groupBy(col)
@@ -1776,6 +1777,14 @@ def q_stats_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "bk",
                 F.when(
                     F.col(col) >= 0, F.expr(f"{col} div {width}")
+                ).when(
+                    F.col(col).isNull(),
+                    F.raise_error(
+                        F.lit(
+                            "rank2_wide requires a non-null domain "
+                            f"(got a NULL {col})"
+                        )
+                    ).cast("long"),
                 ).otherwise(
                     F.raise_error(
                         F.lit(

@@ -59,10 +59,6 @@ class QuerySpec:
     fn: SparkQuery
     oracle: str | None
     doc: str = ""
-    # Marked True for queries whose oracle comparison needs a small float
-    # tolerance in the local test harness (e.g. stddev); the driver may be
-    # stricter — prefer exact idioms wherever possible.
-    approx: bool = False
     tags: tuple[str, ...] = field(default=())
 
 
@@ -72,7 +68,6 @@ REGISTRY: dict[str, QuerySpec] = {}
 def query(
     name: str,
     oracle: str | None = None,
-    approx: bool = False,
     tags: tuple[str, ...] = (),
 ) -> Callable[[SparkQuery], SparkQuery]:
     """Register a SURVEY §2 operator implementation."""
@@ -92,7 +87,7 @@ def query(
         wrapped.__name__ = fn.__name__
         wrapped.__doc__ = fn.__doc__
         REGISTRY[name] = QuerySpec(
-            name=name, fn=wrapped, oracle=oracle, doc=fn.__doc__ or "", approx=approx, tags=tags
+            name=name, fn=wrapped, oracle=oracle, doc=fn.__doc__ or "", tags=tags
         )
         return wrapped
 
@@ -109,9 +104,12 @@ def capabilities() -> dict[str, bool]:
       ``protobuf`` package the PySpark API imports but the streaming
       worker dies at init, so streaming/stateful.py gates on this flag
       (and tests/test_streaming.py skips the e2e when it is False).
-    - ``real_media_decode``: sources/multimodal.py decodes image
-      payloads with Pillow when importable, else the deterministic
-      fake — same mapInPandas plumbing either way.
+    - ``real_media_decode``: Pillow is importable.  BMP, PNG, GIF and
+      baseline JPEG decode natively in sources/multimodal.py without
+      it; Pillow is used only for the remaining formats (progressive /
+      arithmetic / 12-bit JPEG, sub-byte PNG depths), which otherwise
+      fall back to the deterministic fake — same mapInPandas plumbing
+      either way.
     """
     from data_warehouse_hive_spark.sources.multimodal import (
         real_decoder_available,

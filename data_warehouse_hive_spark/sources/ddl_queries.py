@@ -2471,8 +2471,7 @@ def ddl_minhash_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast as an anti-join filter, skipped bucket/pair mass
     reported in the result row."""
     from data_warehouse_hive_spark.extensions.dedup import (
-        LSH_BANDS,
-        LSH_ROWS,
+        band_rows,
         signature,
     )
     from data_warehouse_hive_spark.sources.bucketing import (
@@ -2484,18 +2483,7 @@ def ddl_minhash_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = signature(docs).localCheckpoint(eager=False)
 
     def index_rows(s: DataFrame) -> DataFrame:
-        band_cols = [
-            F.concat_ws(
-                "_",
-                *[F.col(f"mh_{b * LSH_ROWS + r}") for r in range(LSH_ROWS)],
-            ).alias(f"band_{b}")
-            for b in range(LSH_BANDS)
-        ]
-        banded = s.select(
-            "doc_id",
-            F.posexplode(F.array(*band_cols)).alias("band_id", "band_key"),
-        )
-        return banded.select(
+        return band_rows(s).select(
             F.concat_ws(":", F.col("band_id"), F.col("band_key")).alias(
                 "bkey"
             ),

@@ -13,6 +13,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 TABLES = (
     "region",
@@ -47,7 +48,6 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown fixture table {name!r}; expected one of {TABLES}")
     df = spark.read.parquet(table_path(sf_dir, name))
     if name == "events":
-        from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
         ts_type = df.schema["ts"].dataType
@@ -93,3 +93,22 @@ def spread(df: DataFrame, spark: SparkSession) -> DataFrame:
     if len(df.inputFiles()) * 4 <= want:
         return df.repartition(want)
     return df
+
+
+def ordered_pairs(df: DataFrame, arr: str, a: str, b: str) -> DataFrame:
+    """Every unordered pair of one array column, one row each: for an
+    array of DISTINCT values in ASCENDING order, emit ``(a, b)`` with
+    a < b — the element at 0-based index i pairs with every later
+    element.
+
+    Two streamed generators: ``posexplode(arr)`` yields (i, x), then
+    ``explode(slice(arr, i + 2, size(arr)))`` yields the tail after x
+    (slice is 1-based; a length of size(arr) clamps to the end).  A
+    group of m values costs m(m−1)/2 output rows, and no single row
+    ever holds the quadratic pair array.  Callers bound m with their
+    own size() filters before this call.
+    """
+    return df.select(arr, F.posexplode(arr).alias("_pos", a)).select(
+        a,
+        F.explode(F.slice(F.col(arr), F.col("_pos") + 2, F.size(arr))).alias(b),
+    )

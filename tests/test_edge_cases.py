@@ -130,3 +130,68 @@ def test_kmv_union_smaller_than_k(spark, tmp_path):
     r = out[0].asDict()
     assert r["exact_union"] == 5
     assert r["est_union"] == 5.0
+
+
+def _spearman_on_prices(spark, tmp_path, prices):
+    """Run q_stats_spearman over a lineitem fixture whose only rows
+    carry the given l_extendedprice values."""
+    from data_warehouse_hive_spark.registry import load_all
+
+    df = spark.createDataFrame(
+        [(float(i % 3 + 1), p) for i, p in enumerate(prices)],
+        "l_quantity double, l_extendedprice double",
+    )
+    df.write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+    return load_all()["q_stats_spearman"].fn(spark, str(tmp_path)).collect()
+
+
+def test_spearman_wide_rank_rejects_null_domain(spark, tmp_path):
+    """rank2_wide's bucketing needs a non-negative, non-null key: a NULL
+    price must fail loudly with its own message, not be reported as a
+    negative value."""
+    import pytest
+
+    with pytest.raises(Exception, match="non-null domain") as err:
+        _spearman_on_prices(spark, tmp_path, [1.0, None, 3.5, 2.25])
+    assert "negative" not in str(err.value)
+    with pytest.raises(Exception, match="non-negative domain"):
+        _spearman_on_prices(spark, tmp_path, [1.0, -2.0, 3.5, 2.25])
+
+
+def test_ordered_pairs_matches_array_expansion(spark):
+    """tables.ordered_pairs ≡ the single-row flatten(transform(slice))
+    i<j expansion it replaced, as multisets, on seeded random sorted
+    distinct int arrays — sizes 0, 1 and 2 plus random sizes up to 300,
+    drawn from one small domain so pairs repeat across arrays."""
+    import random
+    from collections import Counter
+    from itertools import combinations
+
+    from data_warehouse_hive_spark.tables import ordered_pairs
+
+    rng = random.Random(20260817)
+    sizes = [0, 1, 2] + [rng.randint(3, 300) for _ in range(9)] + [300]
+    arrays = [sorted(rng.sample(range(-400, 400), n)) for n in sizes]
+    df = spark.createDataFrame(
+        [(a,) for a in arrays], "arr array<long>"
+    )
+
+    got = Counter(
+        (r["a"], r["b"]) for r in ordered_pairs(df, "arr", "a", "b").collect()
+    )
+    arr = F.col("arr")
+    old = F.flatten(
+        F.transform(
+            arr,
+            lambda x, i: F.transform(
+                F.slice(arr, i + F.lit(2), F.size(arr)),
+                lambda y: F.struct(x.alias("a"), y.alias("b")),
+            ),
+        )
+    )
+    ref = Counter(
+        (r["p"]["a"], r["p"]["b"])
+        for r in df.select(F.explode(old).alias("p")).collect()
+    )
+    assert got == ref
+    assert got == Counter(p for a in arrays for p in combinations(a, 2))

@@ -769,7 +769,7 @@ def test_basket_rules_no_cartesian(spark, sf_dir):
     assert uses_take_ordered(plan), plan
 
 
-def test_similar_items_joins_on_order_key(spark, sf_dir):
+def test_similar_items_no_cartesian(spark, sf_dir):
     plan = _plan(spark, sf_dir, "q_recs_similar_items")
     assert not any(
         "CartesianProduct" in s for s in join_strategies(plan)
@@ -797,9 +797,39 @@ def test_basket_cap_enforced_before_pair_expansion(spark, sf_dir):
     # the registry wraps fns; read the module source for the real body
     whole = inspect.getsource(retrieval)
     src = whole[whole.index("def q_recs_similar_items") :]
-    cap_pos = src.index("MAX_BASKET")
-    pair_pos = src.index("pair_structs")
+    src = src[: src.index("\n@query")]
+    cap_pos = src.index('F.size("ps") <= MAX_BASKET')
+    pair_pos = src.index("ordered_pairs(")
     assert cap_pos < pair_pos, "cap must be applied before pair expansion"
+
+
+def test_pair_generators_stream_no_pair_array(spark, sf_dir):
+    """Every i<j pair expansion goes through tables.ordered_pairs: the
+    plans hold a Generate, never a flatten( of per-element pair arrays
+    that would put a group's m(m−1)/2 pairs inside one row.
+    q_dedup_minhash returns a checkpointed relation, so its builder is
+    also planned directly."""
+    from data_warehouse_hive_spark.extensions.dedup import (
+        minhash_candidate_pairs,
+    )
+    from data_warehouse_hive_spark.tables import t
+
+    plans = {
+        name: _plan(spark, sf_dir, name)
+        for name in (
+            "q_dedup_minhash",
+            "q_dedup_minhash_capped",
+            "q_basket_pairs",
+            "q_basket_rules",
+        )
+    }
+    plans["minhash_candidate_pairs"] = formatted_plan(
+        minhash_candidate_pairs(t(spark, sf_dir, "documents"))
+    )
+    for name, plan in plans.items():
+        assert "flatten(" not in plan, (name, plan)
+        if name != "q_dedup_minhash":
+            assert "Generate" in plan, (name, plan)
 
 
 def test_lm_score_single_corpus_scan(spark, sf_dir):
