@@ -667,7 +667,8 @@ MEMOIZED_COLD_IDS = (
     "q_sim_map",
     "q_sim_ndcg",
     "q_rank_fusion_per_query",
-    # r9: _KNN_CACHE consumers (init graph / refined graph / exact graph)
+    # knn_graph memo consumers (init / refined / exact graph), built
+    # through tables.session_memo like every id above
     "q_embed_knn_refine",
     "q_embed_knn_recall_lift",
 )

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from data_warehouse_hive_spark.registry import query
-from data_warehouse_hive_spark.tables import t
+from data_warehouse_hive_spark.tables import session_memo, t
 
 PR_SCALE = 10**12
 PR_ITERS = 3
@@ -966,27 +966,25 @@ def _o_labelprop() -> str:
     """
 
 
-# Converged-LPA memo, keyed by (application, sf_dir) — the same sanctioned
-# shared-state pattern as similarity._KMEANS_CACHE: the loop is
-# deterministic end to end (fixed rounds, count-desc/label-asc tiebreak),
-# so q_graph_labelprop and q_graph_modularity reusing ONE run per session
-# cannot change either result; the relations are localCheckpointed, so a
-# reuse scans materialized blocks instead of re-running the LSH pipeline.
-_LPA_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
+_LPA_CACHE: dict[tuple[str, str, str], tuple[DataFrame, DataFrame]] = {}
 
 
 def _lpa_labels(spark: SparkSession, sf_dir: str):
-    """Run the bounded synchronous LPA loop; returns (symmetrized edge
-    relation, final (node, lbl) labels) — shared by q_graph_labelprop
-    and q_graph_modularity (memoized per session, see _LPA_CACHE)."""
+    """(symmetrized edge relation, final (node, lbl) labels) of the
+    bounded synchronous LPA loop — shared by q_graph_labelprop,
+    q_graph_modularity and q_graph_nmi, built once per session
+    (tables.session_memo).  Deterministic end to end (fixed rounds,
+    count-desc/label-asc tiebreak), so sharing one run cannot change
+    any result."""
+    return session_memo(
+        _LPA_CACHE, spark, sf_dir, lambda: _build_lpa_labels(spark, sf_dir)
+    )
+
+
+def _build_lpa_labels(spark: SparkSession, sf_dir: str):
     from data_warehouse_hive_spark.extensions.dedup import (
         candidate_pairs_cached,
     )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _LPA_CACHE.get(key)
-    if hit is not None:
-        return hit
 
     pairs = candidate_pairs_cached(spark, sf_dir)
     und = (
@@ -1014,7 +1012,6 @@ def _lpa_labels(spark: SparkSession, sf_dir: str):
             .select("node", "lbl")
             .localCheckpoint(eager=False)
         )
-    _LPA_CACHE[key] = (und, labels)
     return und, labels
 
 
@@ -1653,7 +1650,7 @@ def q_graph_nmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     community by construction; their count is n_docs vs the corpus).
 
     Reuses the session-memoized LPA labels (one loop per session —
-    graph._LPA_CACHE); everything downstream is a contingency hash
+    tables.session_memo); everything downstream is a contingency hash
     aggregate on the (community, source) domain and entropy terms
     quantized to 1e9 longs on exactly-representable ratios before the
     cross-cell sums.  NMI is fixed-order double math, rounded at 6.
@@ -2244,54 +2241,22 @@ def q_graph_betweenness_approx(
     The point is decoupling the LOOP's partitioning from the
     fact-table width AND from any fixture-tuned constant."""
     from data_warehouse_hive_spark.extensions.similarity import (
-        SEMANTIC_COS,
-        as_double_vec,
-        dot,
-        lsh_bucket_col,
+        lsh_cosine_pairs,
     )
-    from data_warehouse_hive_spark.tables import spread
 
-    v = spread(
-        t(spark, sf_dir, "embeddings").select(
-            "vec_id", as_double_vec("embedding").alias("e")
-        ),
-        spark,
-    ).withColumn("bucket", lsh_bucket_col(F.col("e"))).withColumn(
-        "nrm", F.sqrt(dot(F.col("e"), F.col("e")))
-    )
-    a = v.select(
-        F.col("vec_id").alias("va"), F.col("e").alias("ea"),
-        F.col("nrm").alias("na"), "bucket",
-    )
-    b = v.select(
-        F.col("vec_id").alias("vbid"), F.col("e").alias("eb"),
-        F.col("nrm").alias("nb"), F.col("bucket").alias("bucket_b"),
-    )
+    # checkpoint BEFORE the symmetrizing union: without this the union's
+    # two branches each re-run the bucket join + cosine filter — the
+    # single most expensive stage in the op, paid twice (~2.5s of the
+    # 10s at sf0.1 was this duplicate)
     pairs = (
-        a.join(
-            b,
-            (F.col("bucket") == F.col("bucket_b"))
-            & (F.col("va") < F.col("vbid")),
-        )
-        .filter(
-            F.round(
-                dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")),
-                6,
-            )
-            >= SEMANTIC_COS
-        )
-        .select("va", "vbid")
-        # checkpoint BEFORE the symmetrizing union: without this the
-        # union's two branches each re-run the bucket join + cosine
-        # filter — the single most expensive stage in the op, paid
-        # twice (r10 VERDICT task 6 profiling; ~2.5s of the 10s at
-        # sf0.1 was this duplicate)
+        lsh_cosine_pairs(spark, sf_dir)
+        .select("vec_a", "vec_b")
         .localCheckpoint(eager=False)
     )
     edges = (
-        pairs.select(F.col("va").alias("src"), F.col("vbid").alias("dst"))
+        pairs.select(F.col("vec_a").alias("src"), F.col("vec_b").alias("dst"))
         .unionAll(
-            pairs.select(F.col("vbid").alias("src"), F.col("va").alias("dst"))
+            pairs.select(F.col("vec_b").alias("src"), F.col("vec_a").alias("dst"))
         )
         .localCheckpoint(eager=False)  # consumed by every BFS round
     )

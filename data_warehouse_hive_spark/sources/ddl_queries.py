@@ -50,17 +50,12 @@ def _multiset_compare(a: DataFrame, b: DataFrame) -> tuple[int, int, int]:
     check).  Union with a +1/-1 side tag, group by the full row, and
     read both multiset differences off the per-row count delta:
     extra = Σ max(d, 0) = |a ∖ b|,  missing = Σ max(-d, 0) = |b ∖ a|.
-    NULL/NaN/-0.0 grouping follows the same equality semantics
-    exceptAll uses, so the three numbers are identical to the old
-    idiom's."""
+    NULL/NaN/-0.0 grouping follows exceptAll's equality semantics."""
     cols = a.columns
-    # r14 ADVICE: exceptAll compares POSITIONALLY; this helper compares
-    # by name (unionByName + b.select(*a.columns)).  The two agree only
-    # when both sides share the same columns in the same order, and the
-    # tag/delta columns must not collide with payload names — assert
-    # both so a future caller diverging from the contract fails loudly
-    # instead of comparing reordered columns.
-    assert cols == b.columns, (cols, b.columns)
+    # rows compare BY NAME (unionByName + b.select(*cols)), so both sides
+    # need the same column set in any order; the tag/delta columns must
+    # not collide with payload names
+    assert sorted(cols) == sorted(b.columns), (cols, b.columns)
     assert not {"__side", "__d", "__na"} & set(cols), cols
     row = (
         a.withColumn("__side", F.lit(1))

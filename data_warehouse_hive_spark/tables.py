@@ -112,3 +112,37 @@ def ordered_pairs(df: DataFrame, arr: str, a: str, b: str) -> DataFrame:
         a,
         F.explode(F.slice(F.col(arr), F.col("_pos") + 2, F.size(arr))).alias(b),
     )
+
+
+def session_memo(
+    store: dict, spark: SparkSession, sf_dir: str, build, key: str = ""
+):
+    """Return ``build()`` memoized in ``store`` for this session and
+    corpus — the one session-state layer behind every train-once
+    relation (LSH candidate pairs, converged LPA / k-means, ranking
+    ground truth, kNN graphs, BPE merge tables).
+
+    Entries are keyed ``(applicationId, sf_dir, key)``: a new Spark
+    application always misses, and ``key`` names one of several values
+    a module keeps per corpus.  A miss first evicts every entry of
+    ``store`` from another (app, sf_dir) scope, so a store holds at most
+    the live scope's values — memoized DataFrames are localCheckpointed
+    lineages, and keeping a scope the session has moved on from (a warm
+    pass at one scale, then timing at another) would pin its blocks for
+    the life of the app.  A nested ``build`` may memoize further keys
+    of the same store and scope; they survive, since eviction runs
+    before ``build()``.
+
+    Callers only memoize values that are pure functions of the corpus
+    (each site states why), and checkpoint DataFrames with
+    ``localCheckpoint(eager=False)``: the first consumer materializes
+    the blocks, and every later consumer scans them instead of
+    re-running the source scans.
+    """
+    scope = (spark.sparkContext.applicationId, sf_dir)
+    k = (*scope, key)
+    if k not in store:
+        for stale in [s for s in store if s[:2] != scope]:
+            del store[stale]
+        store[k] = build()
+    return store[k]

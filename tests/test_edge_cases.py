@@ -195,3 +195,115 @@ def test_ordered_pairs_matches_array_expansion(spark):
     )
     assert got == ref
     assert got == Counter(p for a in arrays for p in combinations(a, 2))
+
+
+def _stub_spark(app: str = "app-1"):
+    """Just enough of a SparkSession for tables.session_memo."""
+    from types import SimpleNamespace
+
+    return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app))
+
+
+def test_session_memo_builds_once_per_scope_and_key():
+    from data_warehouse_hive_spark.tables import session_memo
+
+    store: dict = {}
+    calls: list = []
+
+    def build(tag):
+        return lambda: calls.append(tag) or tag
+
+    s = _stub_spark()
+    assert session_memo(store, s, "sf_a", build("a")) == "a"
+    assert session_memo(store, s, "sf_a", build("again")) == "a"
+    assert session_memo(store, s, "sf_a", build("x"), key="x") == "x"
+    assert session_memo(store, s, "sf_a", build("x2"), key="x") == "x"
+    assert calls == ["a", "x"]
+    # a new application is a new scope even for the same sf_dir
+    assert session_memo(store, _stub_spark("app-2"), "sf_a", build("b")) == "b"
+    assert calls == ["a", "x", "b"]
+
+
+def test_session_memo_new_scope_evicts_only_stale_entries():
+    from data_warehouse_hive_spark.tables import session_memo
+
+    s = _stub_spark()
+    store: dict = {}
+    other: dict = {}
+    session_memo(store, s, "sf_a", lambda: 1)
+    session_memo(store, s, "sf_a", lambda: 2, key="k")
+    session_memo(other, s, "sf_a", lambda: 3)
+    assert session_memo(store, s, "sf_b", lambda: 4) == 4
+    assert store == {("app-1", "sf_b", ""): 4}
+    # eviction is per store: another module's memo keeps its entries
+    assert other == {("app-1", "sf_a", ""): 3}
+    # a new key in the live scope keeps that scope's other keys
+    session_memo(store, s, "sf_b", lambda: 5, key="k")
+    assert store == {("app-1", "sf_b", ""): 4, ("app-1", "sf_b", "k"): 5}
+
+
+def test_session_memo_nested_same_scope_build_keeps_both_keys():
+    from data_warehouse_hive_spark.tables import session_memo
+
+    s = _stub_spark()
+    store: dict = {("app-1", "sf_old", "inner"): "stale"}
+
+    def inner():
+        return session_memo(store, s, "sf_a", lambda: ["inner"], key="inner")
+
+    def outer():
+        return inner() + ["outer"]
+
+    assert session_memo(store, s, "sf_a", outer, key="outer") == [
+        "inner",
+        "outer",
+    ]
+    assert store == {
+        ("app-1", "sf_a", "inner"): ["inner"],
+        ("app-1", "sf_a", "outer"): ["inner", "outer"],
+    }
+    assert inner() is store[("app-1", "sf_a", "inner")]
+
+
+def test_session_memo_round_trips_plain_values():
+    from data_warehouse_hive_spark.tables import session_memo
+
+    s = _stub_spark()
+    store: dict = {}
+    merges = [(1, "a", "b", "ab", 7)]
+    pair = ("und", "labels")
+    assert session_memo(store, s, "sf_a", lambda: merges) is merges
+    assert session_memo(store, s, "sf_a", list) is merges
+    assert session_memo(store, s, "sf_a", lambda: pair, key="t") is pair
+    assert session_memo(store, s, "sf_a", tuple, key="t") is pair
+
+
+def test_pairs_memo_keeps_only_live_scope(spark, sf_dir, tmp_path):
+    """Warming at one sf_dir and then running at another must not pin
+    the first corpus's checkpointed pairs (both calls stay lazy)."""
+    import shutil
+
+    from data_warehouse_hive_spark.extensions import dedup
+    from data_warehouse_hive_spark.tables import table_path
+
+    shutil.copy(
+        table_path(sf_dir, "documents"), table_path(str(tmp_path), "documents")
+    )
+    dedup.candidate_pairs_cached(spark, sf_dir)
+    dedup.candidate_pairs_cached(spark, str(tmp_path))
+    assert len(dedup._PAIRS_CACHE) == 1
+    assert list(dedup._PAIRS_CACHE)[0][1] == str(tmp_path)
+
+
+def test_multiset_compare_matches_columns_by_name(spark):
+    """_multiset_compare joins the two sides by column NAME, so the same
+    rows with reordered columns are equal; a different column set is a
+    contract violation."""
+    import pytest
+
+    from data_warehouse_hive_spark.sources.ddl_queries import _multiset_compare
+
+    a = spark.createDataFrame([(1, "x"), (2, "y"), (2, "y")], "k long, v string")
+    assert _multiset_compare(a, a.select("v", "k")) == (0, 0, 3)
+    with pytest.raises(AssertionError):
+        _multiset_compare(a, a.select("k", F.col("v").alias("w")))

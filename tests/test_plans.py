@@ -1207,6 +1207,37 @@ def test_memoized_families_second_consumer_no_rescan(spark, sf_dir):
         assert "ExistingRDD" in plan, (second, plan)
 
 
+def test_session_state_has_one_memo_path():
+    """Every session memo goes through tables.session_memo: no other
+    code reads applicationId to key its own memo, and no module defines
+    a memo helper of its own."""
+    import ast
+    import pathlib
+
+    import data_warehouse_hive_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        src = path.read_text()
+        tree = ast.parse(src)
+        helpers = [
+            n for n in ast.walk(tree)
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+            and n.name.endswith("memo")
+        ]
+        allowed = range(0)
+        if path.relative_to(root).as_posix() == "tables.py":
+            assert [h.name for h in helpers] == ["session_memo"]
+            allowed = range(helpers[0].lineno, helpers[0].end_lineno + 1)
+        else:
+            assert not helpers, (path, [h.name for h in helpers])
+        stray = [
+            i for i, line in enumerate(src.splitlines(), 1)
+            if "applicationId" in line and i not in allowed
+        ]
+        assert not stray, (path, stray)
+
+
 def test_pareto_frontier_no_raw_doc_sort(spark, sf_dir):
     """The budget frontier must NEVER sort raw documents: quality is
     quantized to the 1001-bucket grid by a hash aggregate and every
